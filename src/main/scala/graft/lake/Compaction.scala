@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ final case class CompactionStats(
     rowsRewritten: Long,
     wallMs: Long)
 
-object Compaction {
+object Compaction extends Logging {
 
   /** test hook: sleep between the fold's data write and its commit — lets
     * specs race ingest epochs against an in-flight out-of-band fold
@@ -336,8 +337,7 @@ object Compaction {
           survivors.flatMap(s => table.files(s).map(f => canon(local(f.path)))).toSet))
       } catch {
         case NonFatal(e) =>
-          System.err.println(
-            s"[graft] vacuum: skipping orphan GC — liveness incomplete: $e")
+          logWarning("vacuum: skipping orphan GC — liveness incomplete", e)
           None
       }
     var orphans = 0

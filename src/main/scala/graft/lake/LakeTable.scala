@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
@@ -134,7 +135,7 @@ final case class Snapshot(
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
 }
 
-object LakeTable {
+object LakeTable extends Logging {
   val LsnCol = "_lsn"
   val DeletedCol = "_deleted"
   val CellLsnCol = "_cell_lsn"
@@ -296,8 +297,8 @@ object LakeTable {
               catch {
                 case e: java.nio.file.NoSuchFileException
                     if name.stripPrefix("v").stripSuffix(".json").toLong != headVersion =>
-                  System.err.println(s"[graft] stampFormatVersion: skipping " +
-                    s"$name — manifest already vacuumed (${e.getMessage})")
+                  logWarning(s"stampFormatVersion: skipping $name — manifest " +
+                    s"already vacuumed (${e.getMessage})")
                   None
               }
             case _ => Some(ast) // already v3-shaped, just unstamped

@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,7 +30,7 @@ import graft.lake.{DataFile, KeyCodec, LakeTable}
  * numeric order, both of which the encoding preserves, so driver-side
  * pruning compares in exactly the order the stats were computed in.
  */
-object FileStats {
+object FileStats extends Logging {
 
   /** All footer stats present and usable -> Some(files); else None. */
   def fromFooters(spark: SparkSession, outDir: String, k1: String,
@@ -83,7 +84,7 @@ object FileStats {
       case NonFatal(e) =>
         // recoverable (e.g. a footer parse error): fall back to the scan path
         // rather than failing the merge epoch / restarting the stream
-        System.err.println(s"[graft] footer stats failed for $outDir: $e")
+        logWarning(s"footer stats failed for $outDir; falling back to a scan", e)
         None
     }
   }

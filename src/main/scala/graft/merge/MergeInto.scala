@@ -1,5 +1,6 @@
 package graft.merge
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -181,16 +182,15 @@ final case class MergeStats(
     filesPruned: Int,
     filesAdded: Int,
     wallMs: Long,
-    /** phase breakdown (ms): batch stats pass, key collect (CoW only), data
-      * write incl. range sampling, footer stats, snapshot commit */
+    /** phase breakdown (ms): batch stats pass (incl. the CoW key collect),
+      * data write incl. range sampling, footer stats, snapshot commit */
     statsMs: Long,
-    keysMs: Long,
     writeMs: Long,
     footerMs: Long,
     commitMs: Long,
     noop: Boolean)
 
-object MergeInto {
+object MergeInto extends Logging {
   import LakeTable.{DeletedCol, LsnCol}
 
   /** last observed batch rows per checkpoint — the MoR file-count estimator
@@ -221,7 +221,7 @@ object MergeInto {
       // exactly-once: replayed epoch is a no-op (epoch ids per checkpoint are
       // monotone — Structured Streaming's foreachBatch contract)
       return MergeStats(ckptId, epochId, snap.version, 0, -1, -1, 0, 0, 0,
-        refFileCount, 0, 0, 0, 0, 0, 0, 0, noop = true)
+        refFileCount, 0, 0, 0, 0, 0, 0, noop = true)
     }
 
     // the merge key lives in table metadata; a mismatched caller would
@@ -354,13 +354,12 @@ object MergeInto {
         } else globalStats()
       }
       val statsMs = millisSince(tStats)
-      val keysMs = 0L
 
       if (!isMor && bRows == 0) {
         val next = table.commitChange(snap, snap.schemaJson, Set.empty, Nil,
           Some((ckptId, epochId)))
         return MergeStats(ckptId, epochId, next.version, 0, -1, -1, 0, 0, 0,
-          refFileCount, 0, millisSince(t0), statsMs, keysMs, 0, 0, 0,
+          refFileCount, 0, millisSince(t0), statsMs, 0, 0, 0,
           noop = false)
       }
 
@@ -535,7 +534,7 @@ object MergeInto {
           Some((ckptId, epochId)))
         val stats = MergeStats(ckptId, epochId, next.version, 0, -1, -1,
           untouchedRows, 0, 0, untouchedCount, 0,
-          millisSince(t0), statsMs, keysMs, writeMs, 0, 0, noop = false)
+          millisSince(t0), statsMs, writeMs, 0, 0, noop = false)
         writeMetrics(spark, table, stats)
         return stats
       }
@@ -565,7 +564,7 @@ object MergeInto {
       // (e.g. racing compaction) may land the epoch at a later version
       val stats = MergeStats(ckptId, epochId, committed.version, bRowsFinal, bMinLsn, bMaxLsn,
         outputRows, bDeletes, touched.size, untouchedCount, newFiles.size,
-        millisSince(t0), statsMs, keysMs, writeMs, footerMs, commitMs,
+        millisSince(t0), statsMs, writeMs, footerMs, commitMs,
         noop = false)
       writeMetrics(spark, table, stats)
 
@@ -621,7 +620,7 @@ object MergeInto {
         try task()
         catch {
           case e: Throwable =>
-            System.err.println(s"[graft] maintenance task for $tableDir failed: $e")
+            logWarning(s"maintenance task for $tableDir failed", e)
         } finally {
           maintenanceInFlight.remove(tableDir); ()
         }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -66,10 +67,17 @@ final case class IngestConfig(
       * parallelism no matter how many cores exist — measured as THE scaling
       * bottleneck. 16 MiB keeps typical binlog segments one-per-task.
       *
-      * NOTE: applied to the shared session config at `start` and left in
-      * place (micro-batch planning re-reads it every epoch, so it cannot be
-      * scoped to the stream). Pass None to leave the session untouched;
-      * `runAvailableNow` restores the prior value when the stream ends. */
+      * NOTE: one of the stream session settings
+      * (`CdcIngestJob.sessionSettings`) that `start` applies to the shared
+      * session config and leaves in place (micro-batch planning re-reads
+      * them every epoch, so they cannot be scoped to the stream). The other
+      * is `spark.sql.sources.parallelPartitionDiscovery.threshold` =
+      * Int.MaxValue when the WAL sits on the local filesystem, so each
+      * epoch's WAL listing runs on the driver instead of as a Spark job.
+      * While applied, lake reads in the same session of more than 32 files
+      * list on the driver too. `drainAvailableNow` restores every applied
+      * setting to its prior value when the stream ends. Pass None to leave
+      * `maxPartitionBytes` untouched. */
     maxPartitionBytes: Option[Long] = Some(16L * 1024 * 1024),
     /** merge-on-read by default: a streaming epoch writes O(batch) delta
       * files, never a copy-on-write rewrite of the table (see MergeMode) —
@@ -114,14 +122,31 @@ object CdcIngestJob {
   def payloadSchema(changeSchema: StructType): StructType =
     StructType(changeSchema.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
 
+  private val MaxPartitionBytesKey = "spark.sql.files.maxPartitionBytes"
+  private val ListingThresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** Session settings the stream needs, applied by [[start]] and restored by
+    * [[drainAvailableNow]]. Spark's file source re-lists the whole WAL tree
+    * every epoch, and a directory with more subdirectories than the listing
+    * threshold (default 32; the WAL keeps one directory per segment) is
+    * listed by a distributed Spark job — a job plus one task per directory
+    * per epoch. On the local filesystem the driver lists the same tree in a
+    * fraction of that, so the threshold is lifted there; remote filesystems
+    * keep Spark's distributed listing. */
+  private def sessionSettings(spark: SparkSession, cfg: IngestConfig): Seq[(String, String)] = {
+    val walFs = new Path(cfg.walDir).getFileSystem(spark.sessionState.newHadoopConf())
+    cfg.maxPartitionBytes.map(b => MaxPartitionBytesKey -> b.toString).toSeq ++
+      (if (walFs.getUri.getScheme == "file") Seq(ListingThresholdKey -> Int.MaxValue.toString)
+       else Nil)
+  }
+
   def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery = {
     if (!LakeTable.exists(cfg.tableDir))
       // the merge key comes from the caller's merge options — creating with
       // a different key would fail (or corrupt pruning) on the first epoch
       LakeTable.create(cfg.tableDir, payloadSchema(cfg.schema),
         cfg.mergeOptions.keyCols)
-    cfg.maxPartitionBytes.foreach(b =>
-      spark.conf.set("spark.sql.files.maxPartitionBytes", b))
+    sessionSettings(spark, cfg).foreach { case (k, v) => spark.conf.set(k, v) }
     val id = ckptId(cfg.checkpointDir)
 
     var src = spark.readStream
@@ -187,18 +212,20 @@ object CdcIngestJob {
   def drainAvailableNow(spark: SparkSession, cfg: IngestConfig): Unit = {
     val listener = new LineageListener(cfg.tableDir)
     spark.streams.addListener(listener)
-    val priorMpb = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+    // `getAll` holds only explicitly set keys: an unset key is restored
+    // unset, not pinned to the default `getOption` would report for it
+    val set = spark.conf.getAll
+    val prior = sessionSettings(spark, cfg).map { case (k, _) => k -> set.get(k) }
     try {
       val q = start(spark, cfg, Trigger.AvailableNow())
       q.awaitTermination()
     } finally {
       spark.streams.removeListener(listener)
-      // bounded lifecycle => restore the session's scan-partitioning config
-      if (cfg.maxPartitionBytes.isDefined)
-        priorMpb match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-          case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        }
+      // bounded lifecycle => restore every session setting `start` applied
+      prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 }

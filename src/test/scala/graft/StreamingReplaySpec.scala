@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,6 +138,79 @@ class StreamingReplaySpec extends AnyFunSuite {
     val got = table.read(spark).collect()
       .map(r => r.getLong(r.fieldIndex("id")) -> r.getString(r.fieldIndex("v"))).toMap
     assert(got == Map(10L -> "b", 11L -> "c"))
+  }
+
+  test("WAL listing runs on the driver: no Spark listing job per epoch, " +
+    "session settings restored after the drain") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val work = TestSpark.tmpDir("stream-listing")
+    val wal = s"$work/wal"
+    // 80 one-directory segments, 48 of them under era=0: past Spark's
+    // 32-directory parallel-listing threshold
+    val pWide = GenParams(nEvents = 8000, eventsPerFile = 100)
+    ChangelogGen.writeWal(spark, pWide, wal)
+    assert(new java.io.File(s"$wal/era=0").list().count(_.startsWith("wal_file=")) > 32)
+
+    // listing jobs over the WAL, seen on the listener bus; a marker job after
+    // the action flushes the (in-order) bus before the count is read
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    def walListingJobs(action: => Unit): Int = {
+      descriptions.clear()
+      action
+      val marker = s"listing-spec-marker-${System.nanoTime()}"
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!descriptions.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(descriptions.contains(marker), "listener bus did not deliver the marker job")
+      descriptions.asScala.count(d =>
+        d.startsWith("Listing leaf files and directories") && d.contains(wal))
+    }
+
+    val mpbKey = "spark.sql.files.maxPartitionBytes"
+    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def explicit(k: String) = spark.conf.getAll.get(k)
+    val sessionMpb = explicit(mpbKey)
+    val sessionThreshold = explicit(thresholdKey)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.conf.set(mpbKey, "33554432") // a prior value that was set
+      spark.conf.unset(thresholdKey) // and one that was unset
+      val streamJobs = walListingJobs {
+        CdcIngestJob.runAvailableNow(spark, IngestConfig(wal, s"$work/table",
+          s"$work/ckpt", maxFilesPerTrigger = Some(20)))
+      }
+      assert(streamJobs == 0, s"$streamJobs WAL listing job(s) during the stream")
+      assert(explicit(mpbKey).contains("33554432"))
+      assert(explicit(thresholdKey).isEmpty, s"threshold left at ${explicit(thresholdKey)}")
+
+      // the same tree at the session's default threshold lists as a Spark job
+      val batchJobs = walListingJobs {
+        spark.read.option("recursiveFileLookup", "true").parquet(wal)
+        ()
+      }
+      assert(batchJobs >= 1, "default threshold should list the WAL as a Spark job")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      sessionMpb.fold(spark.conf.unset(mpbKey))(spark.conf.set(mpbKey, _))
+      sessionThreshold.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
+    }
+
+    val got = LakeTable.load(s"$work/table").read(spark).collect().map { r =>
+      (r.getString(r.fieldIndex("conv_id")), r.getInt(r.fieldIndex("turn_idx"))) ->
+        ((r.getString(r.fieldIndex("role")), r.getString(r.fieldIndex("text")),
+          Option(r.getString(r.fieldIndex("tool"))), r.getTimestamp(r.fieldIndex("ts")),
+          Option(r.getString(r.fieldIndex("tool_meta")))))
+    }.toMap
+    val want = ChangelogGen.foldOracle(pWide).map { case (k, e) =>
+      k -> ((e.role, e.text, e.tool, e.ts, e.tool_meta))
+    }
+    assert(got == want, s"state differs from the fold oracle (${got.size} vs ${want.size} rows)")
   }
 
   test("delete-after-read: consumed WAL files are removed, state still exact") {
